@@ -10,26 +10,28 @@
 # last and calibrate the machine's own scaling ceiling (SMT/turbo).
 #
 # Usage: scripts/scaling.sh [nRows] [loCores] [hiCores] [passes]
+# The levels default to nproc/4 and nproc; the driver heap is half of
+# MemTotal, clamped to 2..8 GiB (the same rule as the Tier-1 test run).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+CPUS=$(nproc)
 N=${1:-2000000}
-LO=${2:-8}
-HI=${3:-32}
+LO=${2:-$(( CPUS / 4 > 0 ? CPUS / 4 : 1 ))}
+HI=${3:-$CPUS}
 PASSES=${4:-3}
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g)}' /proc/meminfo)
 JAR=target/scala-2.13/aimonitoringlogprocessorspark_2.13-0.1.0.jar
-WORK=$(mktemp -d /dev/shm/graft-scaling-XXXX)
+WORK=$(mktemp -d "${TMPDIR:-/tmp}/graft-scaling-XXXX")
 trap 'rm -rf "$WORK"' EXIT
 # -Xms=-Xmx + AlwaysPreTouch: without it the JVM faults its heap in
 # lazily and the first ~8 write-heavy jobs pay multi-10s page-zeroing
 # penalties at high thread counts (measured 64s -> 5s on identical work).
-# Big fixed young gen: the write path is pure churn (no live data), so
-# promotion — and with it G1 mixed/full pauses — is avoided entirely.
-SUBMIT=(/opt/spark/bin/spark-submit --driver-memory 24g
+SUBMIT=("${SPARK_HOME:-/opt/spark}/bin/spark-submit" --driver-memory "${HEAP}g"
         --conf spark.ui.enabled=false
         --conf spark.sql.session.timeZone=UTC
         --conf spark.sql.maxConcurrentOutputFileWriters=8
-        --conf "spark.driver.extraJavaOptions=-XX:+UseParallelGC -Xmn16g -Xms24g -XX:+AlwaysPreTouch")
+        --conf "spark.driver.extraJavaOptions=-XX:+UseParallelGC -Xms${HEAP}g -XX:+AlwaysPreTouch")
 
 sbt -batch package > /dev/null
 

@@ -75,15 +75,15 @@ object SparkEntry {
   private def exactSum(c: Column): Column =
     sum(c.cast("decimal(18,2)")).cast("double")
 
-  /** Run-scoped stored-artifact root for index/export roundtrip queries:
-    * app-id-suffixed (no collision between concurrent sessions), with
-    * PRIOR generations of the same artifact tag deleted on creation — so
-    * repeated Bench/Verify runs keep at most one generation per tag on
-    * disk instead of accumulating orphans (index lifecycle hygiene, r5
-    * verdict #6). */
+  /** Run-scoped stored-artifact root for index/export roundtrip queries,
+    * under the JVM's `java.io.tmpdir`: app-id-suffixed (no collision
+    * between concurrent sessions), with PRIOR generations of the same
+    * artifact tag deleted on creation — so repeated Bench/Verify runs keep
+    * at most one generation per tag on disk instead of accumulating
+    * orphans (index lifecycle hygiene, r5 verdict #6). */
   private def scratchPath(s: SparkSession, tag: String): String = {
     val appId = s.sparkContext.applicationId
-    val dir = new java.io.File("/tmp")
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"))
     val prefix = s"graft_${tag}_"
     Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
       if (f.getName.startsWith(prefix) && !f.getName.endsWith(appId)) {
@@ -93,7 +93,7 @@ object SparkEntry {
         catch { case _: Throwable => } // best-effort hygiene
       }
     }
-    s"/tmp/graft_${tag}_$appId"
+    new java.io.File(dir, s"graft_${tag}_$appId").getPath
   }
 
   // ---- flagship -----------------------------------------------------------

@@ -41,11 +41,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string> input, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    WinnowExprs.checkTokens(prettyName, child.dataType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -163,11 +160,8 @@ object WinnowFingerprints {
 case class WinnowMd5Windows(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string> input, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    WinnowExprs.checkTokens(prettyName, child.dataType)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -241,6 +235,18 @@ object WinnowMd5Windows {
 }
 
 object WinnowExprs {
+  /** Input contract of both winnowing kernels: an array of non-null
+    * tokens. The kernels hash every element, so a type that admits null
+    * elements is rejected at analysis instead of failing per row. */
+  private[functions] def checkTokens(name: String, t: DataType): TypeCheckResult = t match {
+    case ArrayType(StringType, false) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, true) => TypeCheckResult.TypeCheckFailure(
+      s"$name requires array<string> without null elements (containsNull = false, " +
+        "as split() returns); got an array whose elements may be null")
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$name requires array<string> input, got ${other.catalogString}")
+  }
+
   /** Selected winnowing fingerprints of a token array, as one codegen'd
     * O(n) kernel. */
   def winnowFingerprints(tokens: Column, k: Int, w: Int): Column =

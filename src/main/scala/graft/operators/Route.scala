@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /**
  * Router / sink fan-out stage (SURVEY.md §2 B1-B4, F7, J1-J2;
@@ -20,13 +21,20 @@ import org.apache.spark.sql.functions._
  *    second scan. No shuffle: each write task appends to the partition
  *    dirs it sees. (At cluster scale add `repartition($"severity", salt)`
  *    to bound files-per-partition; local mode keeps the shuffle-free path.)
- *  - The anomaly side-table (B3, PostgreSQL analog) and the per-sink
- *    aggregates (F7) are derived by reading BACK the routed sink — a
- *    columnar scan of a few narrow columns (statistics/dictionary pages
- *    only, no text bytes), orders of magnitude cheaper than re-running
- *    the pipeline.
+ *  - The anomaly side-table (B3, PostgreSQL analog), the lineage table and
+ *    the per-sink aggregates (F7) are derived by reading BACK the routed
+ *    sink — a columnar scan of a few narrow columns and no text bytes:
+ *    the anomaly features come from the stored `message_length`/`has_*`
+ *    flags ([[anomalies]]; PipelineSpec pins the scan's `ReadSchema`).
+ *    Callers that know the scored plan read the sink with its
+ *    [[sinkSchema]], so no read-back starts a footer-inference job.
  *  - Row-count conservation (Σ sinks + rejected = input) is observed in
  *    the same single pass via the `Observation` API (J7) — no extra scan.
+ *  - The derived tables are tiny (one row per severity, or per written
+ *    file), so they are ordered inside one partition
+ *    (`coalesce(1).sortWithinPartitions`), not by a range-partitioned
+ *    global sort: the same rows in the same order, without the sampling
+ *    job and the range shuffle.
  */
 object Route {
 
@@ -42,8 +50,8 @@ object Route {
    * (`message_trunc`, null otherwise) and [[logs]] reconstructs
    * `message = coalesce(message_trunc, text)` on read — ~40% fewer sink
    * bytes with identical semantics. `features_json` (~180B/row, needed
-   * only by the anomalies side-table) is computed in the derive pass,
-   * not stored twice.
+   * only by the anomalies side-table) is not stored: [[anomalies]] builds
+   * it from the stored flags.
    */
   val sinkColumns: Seq[String] = Seq(
     "id", "url", "ts", "host as service",
@@ -57,37 +65,44 @@ object Route {
 
   final case class RouteStats(inputRows: Long, routedRows: Long, rejectedRows: Long)
 
+  /** Rejected rows take the dead-letter partition as their routing key. */
+  private def routeKey(scored: DataFrame): DataFrame =
+    scored.withColumn("severity",
+      when(col("parse_ok"), col("severity")).otherwise(RejectedPartition))
+
+  private def sinkRows(keyed: DataFrame): DataFrame =
+    keyed.selectExpr(sinkColumns :+ "severity": _*)
+
+  /**
+   * Schema of `root/routed` as [[apply]] writes it from `scored`: the sink
+   * columns, then the `severity` partition column, all nullable as parquet
+   * reads them back. Analysis only — no job — so it is known also when the
+   * route stage itself is skipped on resume.
+   */
+  def sinkSchema(scored: DataFrame): StructType =
+    StructType(sinkRows(routeKey(scored)).schema.map(f => StructField(f.name, f.dataType)))
+
+  /** The routed sink (REJECTED included) read with a known schema. */
+  def routed(spark: SparkSession, root: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$root/routed")
+
   /**
    * Writes `scored` (output of Parse→Enrich→Score, incl. `parse_ok`) to
    * `root/routed` partitioned by severity (rejected rows under
    * `severity=REJECTED`), then derives `root/anomalies` from the sink
    * read-back. Returns conservation stats from the single heavy pass.
    */
-  private def timed[T](what: String)(body: => T): T = {
-    if (sys.env.contains("GRAFT_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[route]    $what%-14s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    } else body
-  }
-
   def apply(scored: DataFrame, root: String): RouteStats = {
     val spark = scored.sparkSession
     val obs = new Observation()
-    timed("heavy-pass") {
-      scored
-        .withColumn("severity",
-          when(col("parse_ok"), col("severity")).otherwise(RejectedPartition))
-        .observe(obs,
-          count(lit(1)).as("input_rows"),
-          count(when(col("parse_ok"), 1)).as("routed_rows"),
-          count(when(!col("parse_ok"), 1)).as("rejected_rows"))
-        .selectExpr(sinkColumns :+ "severity": _*)
-        .write.mode("overwrite")
-        .partitionBy("severity")
-        .parquet(s"$root/routed")
-    }
+    sinkRows(routeKey(scored)
+      .observe(obs,
+        count(lit(1)).as("input_rows"),
+        count(when(col("parse_ok"), 1)).as("routed_rows"),
+        count(when(!col("parse_ok"), 1)).as("rejected_rows")))
+      .write.mode("overwrite")
+      .partitionBy("severity")
+      .parquet(s"$root/routed")
 
     val row = obs.get
     val stats = RouteStats(
@@ -95,29 +110,39 @@ object Route {
       row("routed_rows").asInstanceOf[Long],
       row("rejected_rows").asInstanceOf[Long])
 
-    // B3 — anomaly side-table via read-back (reference persists every
-    // prediction, anomalous or not: LogProcessorServiceTest.java:506-533).
-    // features JSON (G14) is derived here rather than written twice.
-    timed("anomalies") { logs(spark, root)
-      .select(
-        col("id").as("log_id"),
-        col("anomaly_score"),
-        col("is_anomaly"),
-        col("confidence"),
-        col("model_version"),
-        Score.featuresJson(col("message"), col("severity"), col("service"))
-          .as("features"),
-        col("processed_at").as("detected_at"))
+    anomalies(logs(routed(spark, root, sinkSchema(scored))))
       .write.mode("overwrite").parquet(s"$root/anomalies")
-    }
 
     stats
   }
 
+  /**
+   * B3 — the anomaly side-table, one row per routed log (the reference
+   * persists every prediction, anomalous or not:
+   * LogProcessorServiceTest.java:506-533). The features JSON (G14) is
+   * built from the stored enrich flags rather than written twice. For a
+   * routed row they are the flags of its `message`: routed means `text`
+   * is not null, and the flags were computed from that same message.
+   */
+  def anomalies(logs: DataFrame): DataFrame =
+    logs.select(
+      col("id").as("log_id"),
+      col("anomaly_score"),
+      col("is_anomaly"),
+      col("confidence"),
+      col("model_version"),
+      Score.featuresJsonOf(col("message_length"), col("severity"), col("service"),
+        col("has_exception"), col("has_timeout"), col("has_connection")).as("features"),
+      col("processed_at").as("detected_at"))
+
   /** Routed (accepted) log records — partition-pruned to skip REJECTED;
     * reconstructs `message` from the sparse `message_trunc` column. */
   def logs(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/routed")
+    logs(spark.read.parquet(s"$root/routed"))
+
+  /** [[logs]] over an already-opened routed sink. */
+  def logs(routed: DataFrame): DataFrame =
+    routed
       .filter(col("severity") =!= RejectedPartition)
       .withColumn("message", coalesce(col("message_trunc"), col("text")))
       .drop("message_trunc")
@@ -144,10 +169,15 @@ object Route {
 
   /**
    * F7 — per-sink aggregates over the routed sink (read-back; severity is
-   * a partition column so per-severity queries are partition-pruned).
+   * a partition column so per-severity queries are partition-pruned),
+   * in severity order.
    */
   def sinkAggregates(spark: SparkSession, root: String): DataFrame =
-    logs(spark, root)
+    sinkAggregates(logs(spark, root))
+
+  /** [[sinkAggregates]] over [[logs]] of an opened sink. */
+  def sinkAggregates(logs: DataFrame): DataFrame =
+    logs
       .groupBy("severity")
       .agg(
         count(lit(1)).as("doc_count"),
@@ -155,15 +185,20 @@ object Route {
         round(avg(col("anomaly_score")), 4).as("avg_score"),
         count(when(col("is_anomaly"), 1)).as("anomaly_count"),
         count(when(col("alert"), 1)).as("alert_count"))
-      .orderBy("severity")
+      .coalesce(1).sortWithinPartitions("severity")
 
   /**
    * J7 — per-written-file lineage (each file = one write task/partition):
-   * the per-partition lineage rows the checkpoint table records.
+   * the per-partition lineage rows the checkpoint table records, in
+   * (severity, file) order.
    */
   def lineage(spark: SparkSession, root: String): DataFrame =
-    logs(spark, root)
+    lineage(logs(spark, root))
+
+  /** [[lineage]] over [[logs]] of an opened sink. */
+  def lineage(logs: DataFrame): DataFrame =
+    logs
       .groupBy(col("severity"), input_file_name().as("file"))
       .agg(count(lit(1)).as("rows"))
-      .orderBy("severity", "file")
+      .coalesce(1).sortWithinPartitions("severity", "file")
 }

@@ -95,15 +95,29 @@ object Score {
    * Note: per the reference (:151-160) these are the ENRICH-side flags
    * (hasTimeout = G9 "timeout" only), not the ML-side features.
    */
-  def featuresJson(message: Column, level: Column, service: Column): Column = {
+  def featuresJson(message: Column, level: Column, service: Column): Column =
+    featuresJsonOf(length(message), level, service, Parse.hasException(message),
+      Parse.hasTimeout(message), Parse.hasConnection(message))
+
+  /**
+   * [[featuresJson]] from already-computed features: the message length
+   * and the three enrich-side flags (G8-G10). The one JSON layout — the
+   * router builds the anomalies table from the sink's stored
+   * `message_length`/`has_*` columns through it, so it never re-reads the
+   * message text. Null length → 0 and null flag → false, as for a null
+   * message.
+   */
+  def featuresJsonOf(messageLength: Column, level: Column, service: Column,
+                     hasException: Column, hasTimeout: Column,
+                     hasConnection: Column): Column = {
     val b = (c: Column) => when(coalesce(c, lit(false)), "true").otherwise("false")
     concat(
-      lit("{\"messageLength\":"), coalesce(length(message), lit(0)).cast("string"),
+      lit("{\"messageLength\":"), coalesce(messageLength, lit(0)).cast("string"),
       lit(",\"level\":\""), coalesce(level, lit("null")),
       lit("\",\"service\":\""), coalesce(service, lit("null")),
-      lit("\",\"hasException\":"), b(Parse.hasException(message)),
-      lit(",\"hasTimeout\":"), b(Parse.hasTimeout(message)),
-      lit(",\"hasConnection\":"), b(Parse.hasConnection(message)),
+      lit("\",\"hasException\":"), b(hasException),
+      lit(",\"hasTimeout\":"), b(hasTimeout),
+      lit(",\"hasConnection\":"), b(hasConnection),
       lit("}"))
   }
 
@@ -122,6 +136,6 @@ object Score {
       .withColumn("alert", alertGate(col("is_anomaly"), col("confidence")))
     // features JSON (G14) is intentionally NOT materialized here: only the
     // anomalies side-table needs it, and the router derives it there
-    // (Route.apply) instead of paying its bytes in the heavy-pass sink.
+    // (Route.anomalies) instead of paying its bytes in the heavy-pass sink.
   }
 }

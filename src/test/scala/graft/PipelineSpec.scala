@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import graft.operators.Route
+import org.apache.spark.sql.types.{StructField, StructType}
+import graft.operators.{Route, Score}
 import graft.plans.Checkpoint
 
 /**
@@ -9,7 +11,9 @@ import graft.plans.Checkpoint
  *  - routed-row equality per sink vs the pure-Scala RefOracle,
  *  - byte-identical `text` per url,
  *  - row-count conservation across the fan-out,
- *  - idempotent resume from the checkpoint.
+ *  - idempotent resume from the checkpoint,
+ *  - the post-write tail (anomalies, lineage, sink_counts) equal to
+ *    recounts from the sink's text, read through narrow columns only.
  */
 class PipelineSpec extends SparkSuite {
   import spark.implicits._
@@ -111,6 +115,53 @@ class PipelineSpec extends SparkSuite {
     assert(Checkpoint.committed(spark, root, "aggregate"))
     val commits = Checkpoint.commits(spark, root)
     assert(commits.filter($"status" === "committed").count() == 2)
+  }
+
+  test("post-write tail equals text-derived recounts; no text bytes read back") {
+    val root = tmpDir("pipe-tail")
+    val s = Pipeline.run(spark, pages, dims._1, dims._2, root, t0).stats.get
+    val logs = Route.logs(spark, root)
+
+    // anomalies from the stored flags == featuresJson over the message text
+    val anomalies = spark.read.parquet(s"$root/anomalies")
+    val recount = logs.select($"id".as("log_id"), $"anomaly_score", $"is_anomaly",
+      $"confidence", $"model_version",
+      Score.featuresJson($"message", $"severity", $"service").as("features"),
+      $"processed_at".as("detected_at"))
+    assert(anomalies.columns.toSeq == recount.columns.toSeq)
+    assert(anomalies.exceptAll(recount).isEmpty, "anomaly rows not in the recount")
+    assert(recount.exceptAll(anomalies).isEmpty, "recount rows not in anomalies")
+
+    // lineage == per-file recount, row for row and in (severity, file) order
+    val lineage = spark.read.parquet(s"$root/_checkpoint/route/lineage")
+      .as[(String, String, Long)].collect().toSeq
+    val perFile = logs.groupBy($"severity", input_file_name().as("file"))
+      .agg(count(lit(1)).as("rows")).orderBy("severity", "file")
+      .as[(String, String, Long)].collect().toSeq
+    assert(lineage == perFile)
+    assert(lineage.forall(_._2.startsWith("file:///")), lineage.map(_._2).mkString(", "))
+
+    // sink_counts in severity order; the aggregate commit counts its rows
+    val sevs = spark.read.parquet(s"$root/sink_counts").select($"severity")
+      .as[String].collect().toSeq
+    assert(sevs == Seq("ERROR", "INFO", "WARN"))
+    val aggCommit = Checkpoint.commits(spark, root).filter($"stageId" === "aggregate")
+      .select($"inputRows", $"outputRows").as[(Long, Long)].collect().toSeq
+    assert(aggCommit == Seq((3L, 3L)))
+    assert(s.routedRows == logs.count())
+
+    // the known sink schema is the one parquet inference finds
+    val scored = Pipeline.transform(pages, dims._1, dims._2, t0)
+    val inferred = spark.read.parquet(s"$root/routed").schema
+    assert(Route.sinkSchema(scored) ==
+      StructType(inferred.map(f => StructField(f.name, f.dataType))))
+
+    // the anomalies derivation reads narrow columns only
+    val scans = Route.anomalies(Route.logs(Route.routed(spark, root, Route.sinkSchema(scored))))
+      .queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1)
+    val read = scans.head.requiredSchema.fieldNames.toSet
+    assert(!read.contains("text") && !read.contains("message_trunc"), read.mkString(", "))
   }
 
   test("upstream re-run invalidates downstream aggregate (stale-sink guard)") {

@@ -151,6 +151,24 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  test("winnowing kernels reject token arrays that admit null elements") {
+    import graft.functions.WinnowExprs.{winnowFingerprints, winnowMd5Windows}
+    // a literal Seq column is array<string> with containsNull = true
+    val df = Seq((1L, Seq("a", null, "b", "c", "d")), (2L, Seq("a", "b")))
+      .toDF("id", "ts")
+    Seq[(String, org.apache.spark.sql.Column)](
+      "winnow_fingerprints" -> winnowFingerprints($"ts", 2, 2),
+      "winnow_md5_windows" -> winnowMd5Windows($"ts", 2, 2)).foreach { case (name, k) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.select(k))
+      assert(e.getMessage.contains(s"$name requires array<string> without null elements"),
+        e.getMessage)
+    }
+    // the tokenizer the operators use declares non-null elements: accepted
+    val toks = df.select(array_remove(split(concat_ws(" ", $"ts"), " "), "").as("ts"))
+    assert(toks.select(winnowFingerprints($"ts", 2, 2).as("f"))
+      .as[Seq[Long]].collect().map(_.nonEmpty).toSeq == Seq(true, false))
+  }
+
   test("property: RegexCapturePairs equals the two-pass " +
     "arrays_zip(regexp_extract_all g1, g2) form on generated html") {
     val rnd = new scala.util.Random(41)
